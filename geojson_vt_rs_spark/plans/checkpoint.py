@@ -28,6 +28,7 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from geojson_vt_rs_spark.config import Options
 from geojson_vt_rs_spark.operators.pipeline import convert_wrap_stage
@@ -118,26 +119,111 @@ def _read_manifest(out_dir: str, name: str) -> Optional[dict]:
         return json.load(fh)
 
 
+# the order keys the level writers persist in place of feature_idx
+_ORDER_KEYS = ("world_copy", "feature_seq", "slice_path", "sub_idx")
+_KEY_SCHEMA = T.StructType(
+    [T.StructField(c, T.IntegerType()) for c in ("x", "y", "feature_idx")]
+)
+
+
+def _visible(path: str) -> list:
+    """Sorted entries of ``path`` that Spark's file index would list."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(n for n in os.listdir(path) if not n.startswith((".", "_")))
+
+
+def _read_store(root: str, schema: T.StructType, where, zs=None):
+    """Published rows of one store table (``tiles/`` or ``leaves/``), read
+    on the driver with pyarrow instead of a Spark scan job.
+
+    Prunes by path: walks ``root/level=*/z=Z/`` (only the ``z`` in ``zs``
+    when given), streams each file's row groups with only ``schema``'s
+    columns, and keeps the rows where ``where(batch, z)`` is true (null
+    counts as false, as in a Spark filter).  Returns a pyarrow Table of
+    ``schema``'s columns, cast to its types, then ``level`` (string) and
+    ``z`` (int) taken from the path.
+
+    Read contract:
+
+    * It sees only ``level=*/z=*`` directories, and it skips every name
+      starting with ``.`` or ``_`` as Spark's reader does: the drill
+      sink's ``.part-*.tmp*`` files, ``_SUCCESS`` and ``.crc`` files.
+      ``_staging/`` sits beside the tables, outside ``root``.
+    * It relies on the staged-rename commit: a level or drill directory
+      appears under ``root`` complete, or not at all.  That rename is
+      atomic only on one POSIX volume; it does not hold on object stores.
+    * Its driver memory is the matching rows of ``schema``'s columns,
+      plus one row group's columns while they are filtered: one tile's
+      rows for ``read_tile``, and only key columns for the key scans (one
+      row per tile, or per retained feature of the probed ancestors).
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cols = to_arrow_schema(schema)
+    out = cols.append(pa.field("level", pa.string())).append(
+        pa.field("z", pa.int32())
+    )
+    batches = []
+    for ldir in _visible(root):
+        if not ldir.startswith("level="):
+            continue
+        for zdir in _visible(os.path.join(root, ldir)):
+            if not zdir.startswith("z="):
+                continue
+            z = int(zdir[2:])
+            if zs is not None and z not in zs:
+                continue
+            zpath = os.path.join(root, ldir, zdir)
+            for fn in _visible(zpath):
+                with pq.ParquetFile(os.path.join(zpath, fn)) as pf:
+                    for b in pf.iter_batches(columns=cols.names):
+                        b = b.filter(where(b, z))
+                        if b.num_rows:
+                            n = b.num_rows
+                            batches.append(pa.RecordBatch.from_arrays(
+                                b.cast(cols).columns + [
+                                    pa.array([ldir[len("level="):]] * n,
+                                             pa.string()),
+                                    pa.array([z] * n, pa.int32()),
+                                ],
+                                schema=out,
+                            ))
+    return pa.Table.from_batches(batches, out)
+
+
+def _key_set(table) -> set:
+    """The distinct (z, x, y) keys of a ``_read_store`` table."""
+    return set(zip(*(table[c].to_pylist() for c in ("z", "x", "y"))))
+
+
 class CheckpointedPyramid:
     """Distributed pyramid with per-level parquet checkpoints.
 
     Layout under ``out_dir``:
-      tiles/z=*/          rendered tile rows (partition-pruned get_tile)
-      leaves/z=*/         retained leaf source features (drill-down input)
-      frontier/level_N/   the N-th level's input features (resume point)
+      tiles/level=*/z=*/   rendered tile rows plus one stats row per tile
+                           (feature_idx == -1)
+      leaves/level=*/z=*/  retained leaf source features (drill-down input)
+      frontier/level_N/    the N-th level's input features (resume point)
       _manifests/level_N.json  lineage: row counts per kind, wall time
 
-    Write semantics are EXACTLY-ONCE per level: every write of a level
+    ``level`` is ``L<N>`` for a build level and ``drill_<z>_<x>_<y>`` for
+    a drill.  Writes are EXACTLY-ONCE per level and per drill: every write
     lands in ``_staging/`` first, then one atomic directory rename
-    publishes it as ``tiles/level=L<N>`` / ``leaves/level=L<N>`` and the
-    manifest is written last.  On resume, staging leftovers and published
-    level dirs without a manifest are removed before the level recomputes
-    (deterministic content), so readers never see duplicates and need no
-    dedupe.  With ``iceberg=True`` (pyiceberg required — absent in this
-    container) a real snapshot commit subsumes the JSON manifest as the
-    commit point (plans/iceberg_sink.py).  ``level`` is a string
-    partition column readers may ignore; ``z`` remains a partition
-    column so point lookups still prune.
+    publishes it, and a level's manifest is written last.  On resume,
+    staging leftovers and published level dirs without a manifest are
+    removed before the level recomputes (deterministic content), so
+    readers never see duplicates and need no dedupe.  With
+    ``iceberg=True`` (optional pyiceberg) a snapshot commit subsumes the
+    JSON manifest as the commit point (plans/iceberg_sink.py).
+
+    Building and drilling run as Spark jobs.  The point reads — a tile's
+    rows (``read_tile``), the tile-key set (``_tile_keys``) and the
+    ancestor-leaf probe in ``get_tile`` — read the published parquet on
+    the driver (``_read_store``): each is one tile or one key column set,
+    so a Spark job would cost more in scheduling than in work.
     """
 
     def __init__(
@@ -696,16 +782,23 @@ class CheckpointedPyramid:
         )
 
     def read_tile(self, out_dir: str, z: int, x: int, y: int) -> DataFrame:
-        """Partition-pruned point lookup on the tiles table (get_tile
-        memo-hit path, lib.rs:193-195).  feature_idx is derived HERE from
-        the persisted deterministic order-key columns — the output is one
-        tile, so the rank window is a single tiny partition.  (Ranking at
-        write time would funnel the entire dataset through 1-4 tasks at
-        z0/z1 — the scale-killer removed in round 4.)  Repeat reads of
-        the same tile hit a persisted per-(z,x,y) memo (bounded LRU,
-        invalidated on publish) so the warm path pays no parquet scan or
-        rank job — the reference's warm get_tile dict hit."""
-        from pyspark.sql import Window
+        """One tile's feature rows, ordered by feature_idx (the warm
+        get_tile path, lib.rs:193-195).
+
+        The rows are read on the driver (``_read_store``) from the
+        ``z=<z>`` directories only.  feature_idx is derived here: the
+        writers persist the order keys (world_copy, feature_seq,
+        slice_path, sub_idx) instead, because ranking at write time would
+        funnel a whole level through one task per tile at z0/z1.  The
+        rows are ranked by those keys in Arrow and numbered 0..n-1.
+
+        Returns a persisted DataFrame with the columns and types Spark's
+        partition discovery gives the stored rows without the order keys:
+        the stored columns, then ``level`` and ``z``.  It is kept in a
+        bounded LRU memo per (out_dir, z, x, y), which every publish by
+        this object clears, so a repeat read is a dict hit."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         key = (out_dir, z, x, y)
         cached = self._tile_dfs.get(key)
@@ -713,48 +806,53 @@ class CheckpointedPyramid:
             # refresh LRU position
             self._tile_dfs[key] = self._tile_dfs.pop(key)
             return cached
-        w = Window.partitionBy("z", "x", "y").orderBy(
-            "world_copy", "feature_seq", "slice_path", "sub_idx"
+        stored = T.StructType([
+            f for f in T.StructType.fromDDL(TILE_STORE_DDL).fields
+            if f.name != "z"
+        ])
+        t = _read_store(
+            os.path.join(out_dir, "tiles"), stored,
+            lambda b, _: pc.and_(
+                pc.and_(pc.equal(b["x"], x), pc.equal(b["y"], y)),
+                pc.is_valid(b["type"]),
+            ),
+            zs=(z,),
         )
-        df = (
-            self.spark.read.parquet(os.path.join(out_dir, "tiles"))
-            .filter((F.col("z") == z) & (F.col("x") == x) & (F.col("y") == y))
-            .filter(F.col("type").isNotNull())
-            .withColumn("feature_idx", F.row_number().over(w) - 1)
-            .drop("world_copy", "feature_seq", "slice_path", "sub_idx")
-            .orderBy("feature_idx")
-            .persist()
+        t = t.take(pc.sort_indices(
+            t, [(k, "ascending") for k in _ORDER_KEYS],
+            null_placement="at_start",
+        )).drop_columns(list(_ORDER_KEYS))
+        t = t.set_column(
+            t.schema.get_field_index("feature_idx"), "feature_idx",
+            pa.array(range(t.num_rows), pa.int32()),
         )
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType, f.name != "feature_idx")
+             for f in stored if f.name not in _ORDER_KEYS]
+            + [T.StructField("level", T.StringType()),
+               T.StructField("z", T.IntegerType())]
+        )
+        df = self.spark.createDataFrame(t, schema).persist()
         while len(self._tile_dfs) >= self._tile_dfs_cap:
             old = next(iter(self._tile_dfs))
             self._tile_dfs.pop(old).unpersist()
         self._tile_dfs[key] = df
         return df
 
-    def _tile_exists(self, out_dir: str, z: int, x: int, y: int) -> bool:
-        return (z, x, y) in self._tile_keys(out_dir)
-
     def _tile_keys(self, out_dir: str) -> set:
-        """All existing tile keys, from the per-tile stats rows
-        (feature_idx == -1 — exactly one per tile) in ONE pushed-filter
-        scan; cached until this object publishes new tiles.  Replaces the
-        previous per-ancestor take(1) probes (one Spark job each) and
-        the full feature-row distinct in the drill."""
+        """All tile keys (z, x, y) in the store: one per stats row
+        (feature_idx == -1, exactly one per tile), read on the driver
+        (``_read_store``).  Kept until this object publishes new tiles;
+        external writers are out of scope, as for the staged-rename
+        commit."""
         keys = self._keys.get(out_dir)
         if keys is None:
-            tiles_root = os.path.join(out_dir, "tiles")
-            keys = set()
-            if os.path.isdir(tiles_root):
-                pdf = (
-                    self.spark.read.parquet(tiles_root)
-                    .filter(F.col("feature_idx") == -1)
-                    .select("z", "x", "y")
-                    .toPandas()
-                )
-                keys = {
-                    (int(r.z), int(r.x), int(r.y))
-                    for r in pdf.itertuples(index=False)
-                }
+            import pyarrow.compute as pc
+
+            keys = _key_set(_read_store(
+                os.path.join(out_dir, "tiles"), _KEY_SCHEMA,
+                lambda b, _: pc.equal(b["feature_idx"], -1),
+            ))
             self._keys[out_dir] = keys
         return keys
 
@@ -764,6 +862,8 @@ class CheckpointedPyramid:
         ancestor's retained leaf features, append the newly created tiles
         (and updated leaves) to the store, then read.  Returns the tile's
         feature rows (possibly empty = EMPTY_TILE)."""
+        import pyarrow.compute as pc
+
         o = self.options
         if z > o.max_zoom:
             raise ValueError(f"Requested zoom higher than maxZoom: {z}")
@@ -774,10 +874,9 @@ class CheckpointedPyramid:
         if (z, x, y) in tile_keys:
             return self.read_tile(out_dir, z, x, y)
 
-        # find nearest memoized ancestor with retained leaf features:
-        # ONE pushed-filter probe over the ancestor path (z levels
-        # shrink the candidate set to <= max_zoom keys) instead of a
-        # sequential take(1) job per ancestor
+        # find the nearest memoized ancestor with retained leaf features:
+        # one driver-side read of the ancestor path's z directories
+        # (one ancestor per z)
         leaves_path = os.path.join(out_dir, "leaves")
         path = []
         az, ax, ay = z, x, y
@@ -786,23 +885,14 @@ class CheckpointedPyramid:
             ax //= 2
             ay //= 2
             path.append((az, ax, ay))
-        leaf_set: set = set()
-        if path and os.path.isdir(leaves_path):
-            cond = None
-            for pz, px, py in path:
-                c = (F.col("z") == pz) & (F.col("x") == px) & (F.col("y") == py)
-                cond = c if cond is None else (cond | c)
-            probe = (
-                self.spark.read.parquet(leaves_path)
-                .filter(cond)
-                .select("z", "x", "y")
-                .distinct()
-                .toPandas()
-            )
-            leaf_set = {
-                (int(r.z), int(r.x), int(r.y))
-                for r in probe.itertuples(index=False)
-            }
+        want = {pz: (px, py) for pz, px, py in path}
+        leaf_set = _key_set(_read_store(
+            leaves_path, T.StructType(_KEY_SCHEMA.fields[:2]),  # x, y
+            lambda b, bz: pc.and_(
+                pc.equal(b["x"], want[bz][0]), pc.equal(b["y"], want[bz][1])
+            ),
+            zs=want,
+        ))
         leaf = None
         for pz, px, py in path:
             if (pz, px, py) in leaf_set:
