@@ -361,29 +361,6 @@ def clip_xy_stage(
     return pruned.mapInPandas(kernel, schema=FEATURE_SCHEMA)
 
 
-RENDER_SCHEMA = T.StructType(
-    [
-        T.StructField("z", T.IntegerType(), False),
-        T.StructField("x", T.IntegerType(), False),
-        T.StructField("y", T.IntegerType(), False),
-        T.StructField("world_copy", T.IntegerType()),
-        T.StructField("feature_seq", T.LongType()),
-        T.StructField("slice_path", T.StringType()),
-        T.StructField("sub_idx", T.IntegerType()),
-        T.StructField("type", T.IntegerType()),
-        T.StructField("kind", T.IntegerType()),
-        T.StructField("geometry_json", T.StringType()),
-        T.StructField("tags_json", T.StringType()),
-        T.StructField("id_str", T.StringType()),
-        T.StructField("id_num", T.LongType()),
-        T.StructField("id_float", T.DoubleType()),
-        T.StructField("n_emitted", T.IntegerType()),
-    ]
-)
-
-RENDER_COLS = [f.name for f in RENDER_SCHEMA.fields]
-
-
 def batch_pre_transform(pdf: pd.DataFrame, extent: int, tol: float,
                         max_zoom: int):
     """Cross-feature columnar render: transform EVERY point of the Arrow
@@ -436,85 +413,6 @@ def batch_pre_transform(pdf: pd.DataFrame, extent: int, tol: float,
     ty = _round_half_away((all_y * rep_z2 - rep_y) * ext).astype(np.int64)
     keep = all_z > rep_sq
     return offs, tx, ty, keep
-
-
-def render_stage(df: DataFrame, options) -> DataFrame:
-    """Per-ROW tile rendering (tile.rs:105-297 per feature).
-
-    Rendering a tile is decomposable: every feature transforms and
-    filters independently (GC flattening yields several output features,
-    ordered by sub_idx); per-tile num_simplified is the sum of the
-    per-row n_emitted.  This keeps giant tiles (a z0 root with millions
-    of features) fully row-parallel — the reference's sequential
-    InternalTile::new loop is just the serial schedule of this map.
-    feature_idx is assigned later from the deterministic sort key
-    (world_copy, feature_seq, slice_path, sub_idx).
-    """
-    extent = options.tile.extent
-    tol = options.tile.tolerance
-    max_zoom = options.max_zoom
-    lm = options.tile.line_metrics
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            zs = pdf["z"].to_numpy()
-            xs_ = pdf["x"].to_numpy()
-            ys_ = pdf["y"].to_numpy()
-            wc = pdf["world_copy"].to_numpy()
-            seq = pdf["feature_seq"].to_numpy()
-            sp = pdf["slice_path"].to_numpy()
-            offs, btx, bty, bkeep = batch_pre_transform(
-                pdf, extent, tol, max_zoom
-            )
-            for i, f in enumerate(pdf_to_features(pdf)):
-                z, x, y = int(zs[i]), int(xs_[i]), int(ys_[i])
-                tolerance = 0.0 if z == max_zoom else tol / (float(1 << z) * extent)
-                em = TileEmitter(z, x, y, extent, tolerance, lm)
-                a, b = offs[i], offs[i + 1]
-                em.add_feature(f, pre=(btx[a:b], bty[a:b], bkeep[a:b]))
-                if not em.features:
-                    # still contributes num_simplified? no features kept,
-                    # but transform_point calls may have run (e.g. points
-                    # filtered later) — keep the counter row
-                    if em.num_simplified:
-                        out.append(
-                            dict.fromkeys(RENDER_COLS)
-                            | dict(
-                                z=z, x=x, y=y,
-                                world_copy=int(wc[i]), feature_seq=int(seq[i]),
-                                slice_path=sp[i], sub_idx=-1,
-                                n_emitted=em.num_simplified,
-                            )
-                        )
-                    continue
-                for si, tf in enumerate(em.features):
-                    out.append(
-                        dict(
-                            z=z, x=x, y=y,
-                            world_copy=int(wc[i]),
-                            feature_seq=int(seq[i]),
-                            slice_path=sp[i],
-                            sub_idx=si,
-                            type=tf["type"],
-                            kind=tf["kind"],
-                            geometry_json=json.dumps(
-                                tf["geometry"], separators=(",", ":")
-                            ),
-                            tags_json=(
-                                None
-                                if tf["tags"] is None
-                                else json.dumps(tf["tags"], separators=(",", ":"))
-                            ),
-                            id_str=tf["id_str"],
-                            id_num=tf["id_num"],
-                            id_float=tf["id_float"],
-                            n_emitted=em.num_simplified if si == 0 else 0,
-                        )
-                    )
-            yield pd.DataFrame(out, columns=RENDER_COLS)
-
-    return df.mapInPandas(kernel, schema=RENDER_SCHEMA)
 
 
 # fused render+split output: one row stream discriminated by row_kind
@@ -812,11 +710,9 @@ def _rs_cagg_frame(cagg: dict, sub_idx=None) -> pd.DataFrame:
     return pd.DataFrame(d, columns=RS_COLS)
 
 
-def render_split_stage(
-    df: DataFrame, options: Options, emit_parent_cagg: bool = False
-) -> DataFrame:
+def render_split_stage(df: DataFrame, options: Options) -> DataFrame:
     """ONE Python pass per pyramid level: renders every row (RS_RENDER
-    rows, the per-feature RENDER_SCHEMA payload) and, for rows whose tile
+    rows: the per-feature render payload) and, for rows whose tile
     the driver decided to split (action == 'split'), also emits the child
     features (RS_CHILD rows) — the VtFeature is constructed once and
     shared by both, and the level runs one Spark job instead of a render
@@ -824,21 +720,19 @@ def render_split_stage(
 
     The split side keeps split_stage's columnar fast path: bbox-contained
     rows pass through as pandas slices with no per-feature Python.
-    Input must carry the driver's ``action`` column ('leaf'/'split').
-
-    ``emit_parent_cagg=True`` additionally emits per-batch partials of
-    the INPUT tiles' own point sums as RS_CAGG rows with sub_idx = -1 —
-    the optimistic first wave decides leaf-vs-split AFTER rendering from
-    these, so the first level needs no separate decision agg job."""
-    return df.mapInPandas(
-        _render_split_kernel(options, emit_parent_cagg), schema=RS_SCHEMA
-    )
+    Input must carry the driver's ``action`` column ('leaf'/'split')."""
+    return df.mapInPandas(_render_split_kernel(options), schema=RS_SCHEMA)
 
 
 def _render_split_kernel(options: Options, emit_parent_cagg: bool = False):
     """The render/split pandas kernel (see render_split_stage) as a
     reusable generator factory — composable behind the convert+wrap
-    kernel for the fused first-turn wave."""
+    kernel for the fused first-turn wave.
+
+    ``emit_parent_cagg=True`` additionally emits per-batch partials of
+    the INPUT tiles' own point sums as RS_CAGG rows with sub_idx = -1 —
+    the optimistic first wave decides leaf-vs-split AFTER rendering from
+    these, so the first level needs no separate decision agg job."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         body = _rs_body(options)

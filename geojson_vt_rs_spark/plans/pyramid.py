@@ -1,105 +1,53 @@
-"""Distributed tile pyramid: the reference's recursive split_tile
-(/root/reference/src/lib.rs:251-434) re-expressed as a breadth-first
-per-zoom DataFrame loop with a FUSED per-level kernel.
+"""The distributed in-memory tile index: SparkGeoJSONVT.
 
-Equivalence: the recursion's stop conditions are per-tile, so a
-breadth-first traversal visits the same tile set and every tile sees the
-same feature multiset (clip bands are a function of (z,x,y) only).  The
-per-tile work — render (tile.rs:43-101), stop decision (lib.rs:305-338),
-and 4-way child clip (lib.rs:340-428) — is *group-local*, so one
-groupBy(z,x,y).applyInPandas per level does all three and tags each
-output row as tile-feature / stats / leaf-feature / child-feature.
-One shuffle per level, keyed by the same (z,x,y) as the tile-table
-partitioning; the driver sees only rendered-tile rows and stop metadata
-(index-sized), never the feature stream.
+The first-pass index is built by the shared level driver
+(plans/levels.py) into ``_IndexSink``, which collects each level's
+output to the driver in one concurrent wave: rendered tiles are
+registered lazily (``SparkTile`` parses its rows on first access) and
+leaf tiles keep their retained source features in ``leaf_features``,
+the reference's source_features (lib.rs:311,324,335).
 
-"Retain source_features on leaves / clear on split parents"
-(lib.rs:311,324,335,430-433) becomes the leaf-features store; drill-down
-(get_tile miss) re-enters the loop from the nearest memoized ancestor's
-retained features (lib.rs:184-245).  Tiles created empty along the way
-count in stats/total — observable in tests.rs:430 (total == 37 after the
-z11 miss lookups), and every split parent spawns all four children
-(split_tile is called unconditionally), so feature-less children are
-memoized as empty tiles by the driver from the parents' key list.
+A ``get_tile`` miss drills from the nearest memoized ancestor's retained
+features (lib.rs:184-245) in one feature-parallel pass
+(``drill_descend_stage``); the ancestor drops its features once it has
+split (lib.rs:430-433).  Tiles created empty along the way count in
+``stats`` and ``total``, as in the reference (tests.rs:430).
 
-At 100 TB: the frontier shrinks geometrically (features are partitioned
-into disjoint children); hot tiles (dense metros) are bounded by
-index_max_points splitting them further down; AQE coalesces the tail.
-The in-memory tile store is for index-sized outputs; sources/tile_sink
-holds the partitioned-parquet variant with checkpoint manifests.
+Inputs below ``LOCAL_THRESHOLD_POINTS`` run the core tiler on the driver
+instead, unless the caller passes ``prefer_local=False``.  The parquet
+variant with checkpoint manifests is plans/checkpoint.py.
 """
 
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
 from typing import Dict, Optional
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from geojson_vt_rs_spark.config import Options
-from geojson_vt_rs_spark.core.clip import clip_feature
-from geojson_vt_rs_spark.core.tile import TileEmitter
 from geojson_vt_rs_spark.core.tiler import to_id
 from geojson_vt_rs_spark.operators.pipeline import (
-    convert_wrap_render_split_stage,
-    convert_wrap_stage,
+    RS_CAGG,
+    RS_LEAF,
+    RS_RENDER,
+    drill_descend_stage,
 )
 from geojson_vt_rs_spark.operators.schema import (
-    FEATURE_FIELDS,
     TILED_FEATURE_SCHEMA,
     create_feature_df,
-    feature_to_row,
     pdf_to_features,
 )
-
-TILED_COLS = [f.name for f in TILED_FEATURE_SCHEMA.fields]
-
-# row_kind values in the fused per-level output
-K_TILE = 0  # rendered tile feature row
-K_STATS = 1  # per-tile stats row (always present)
-K_LEAF = 2  # retained source feature of a stopped tile
-K_CHILD = 3  # feature clipped into a child tile
-
-STEP_SCHEMA = T.StructType(
-    [
-        T.StructField("row_kind", T.IntegerType(), False),
-        T.StructField("z", T.IntegerType(), False),
-        T.StructField("x", T.IntegerType(), False),
-        T.StructField("y", T.IntegerType(), False),
-        # rendered tile rows
-        T.StructField("feature_idx", T.IntegerType()),
-        T.StructField("type", T.IntegerType()),
-        T.StructField("kind", T.IntegerType()),
-        T.StructField("geometry_json", T.StringType()),
-        T.StructField("tags_json", T.StringType()),
-        T.StructField("tile_id_str", T.StringType()),
-        T.StructField("tile_id_num", T.LongType()),
-        T.StructField("tile_id_float", T.DoubleType()),
-        T.StructField("tile_num_points", T.IntegerType()),
-        T.StructField("tile_num_simplified", T.IntegerType()),
-        T.StructField("action", T.StringType()),  # on stats rows
-    ]
-    + FEATURE_FIELDS
-)
-
-STEP_COLS = [f.name for f in STEP_SCHEMA.fields]
-_FEATURE_NULLS = {f.name: None for f in FEATURE_FIELDS}
-_TILE_NULLS = dict(
-    feature_idx=None,
-    type=None,
-    kind=None,
-    geometry_json=None,
-    tags_json=None,
-    tile_id_str=None,
-    tile_id_num=None,
-    tile_id_float=None,
-    tile_num_points=None,
-    tile_num_simplified=None,
-    action=None,
+from geojson_vt_rs_spark.plans.levels import (
+    K_LEAF,
+    K_STATS,
+    K_TILE,
+    TILED_COLS,
+    build_levels,
+    drill_stats,
 )
 
 
@@ -135,175 +83,12 @@ class SparkTile:
 
 EMPTY_TILE = SparkTile(0, 0, 0, [], 0, 0)
 
-# decisions tables above this row count fall back to createDataFrame
-# (bounded VALUES plan text; below it the LocalRelation needs no job)
-_VALUES_DDF_MAX = 4096
-
-
-def decisions_df(spark: SparkSession, decisions) -> DataFrame:
-    """(z, x, y, action) rows as a LocalRelation-backed DataFrame.
-
-    ``spark.createDataFrame(list)`` parallelizes into defaultParallelism
-    slices, so BROADCASTING the index-sized decisions table ran a 32-task
-    Python-roundtrip job per pyramid level (event-log: 0.3-1.3 s/level).
-    A literal VALUES scan is a LocalTableScan: the broadcast materializes
-    driver-side with NO job.  Falls back to createDataFrame for huge
-    decision tables (bounded plan text)."""
-    from geojson_vt_rs_spark.operators.schema import local_relation_df
-
-    return local_relation_df(
-        spark, list(decisions), "z int, x int, y int, action string",
-        max_rows=_VALUES_DDF_MAX,
-    )
-
-
-def fuse_bound(options: Options, cz: int) -> int:
-    """Max num_points for which a split tile's WHOLE subtree runs in one
-    task.  Serial subtree work ~ tnp * depth, and depth grows while
-    children stay above index_max_points, so first-pass tiling caps at
-    max(index_max_points, 8192); drill-down descends a single path and
-    gets the full budget.  (CheckpointedPyramid drills no longer fuse at
-    all — drill_descend_stage walks every level in one feature-parallel
-    pass; this bound still serves the in-memory index's drills.)"""
-    fm = getattr(options, "fuse_max_points", 0)
-    if cz == 0:
-        return min(fm, max(options.index_max_points, 8192))
-    return fm
-
-
-def _level_kernel(
-    options: Options, cz: int, cx: int, cy: int, force_subtree: bool = False
-):
-    """Group kernel: render + decide + (retain | split-or-subtree) one tile.
-
-    With ``force_subtree`` (driver already routed this group as 'fuse'
-    and guaranteed boundedness) a split action always recurses locally —
-    the caller ignores K_CHILD rows in that mode."""
-    o = options
-    extent = o.tile.extent
-    tol = o.tile.tolerance
-    lm = o.tile.line_metrics
-    max_zoom = o.max_zoom
-    imz = o.index_max_zoom
-    imp = o.index_max_points
-
-    _bound = fuse_bound(o, cz)
-
-    def _emitter_rows(rows, em, z, x, y, action):
-        def tile_row(row_kind, **kw):
-            r = dict(_TILE_NULLS)
-            r.update(_FEATURE_NULLS)
-            r.update(row_kind=row_kind, z=z, x=x, y=y, **kw)
-            return r
-
-        for idx, tf in enumerate(em.features):
-            rows.append(
-                tile_row(
-                    K_TILE,
-                    feature_idx=idx,
-                    type=tf["type"],
-                    kind=tf["kind"],
-                    geometry_json=json.dumps(tf["geometry"], separators=(",", ":")),
-                    tags_json=(
-                        None
-                        if tf["tags"] is None
-                        else json.dumps(tf["tags"], separators=(",", ":"))
-                    ),
-                    tile_id_str=tf["id_str"],
-                    tile_id_num=tf["id_num"],
-                    tile_id_float=tf["id_float"],
-                )
-            )
-        rows.append(
-            tile_row(
-                K_STATS,
-                feature_idx=-1,
-                tile_num_points=em.num_points,
-                tile_num_simplified=em.num_simplified,
-                action=action,
-            )
-        )
-
-    def _leaf_rows(rows, feats, z, x, y):
-        for f in feats:
-            r = dict(_TILE_NULLS)
-            r.update(feature_to_row(f))
-            r.update(row_kind=K_LEAF, z=z, x=x, y=y)
-            rows.append(r)
-
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from geojson_vt_rs_spark.core.tiler import GeoJSONVT as CoreTiler
-
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        tolerance = 0.0 if z == max_zoom else tol / (float(1 << z) * extent)
-        em = TileEmitter(z, x, y, extent, tolerance, lm)
-        ordered = pdf.sort_values(
-            ["world_copy", "feature_seq", "slice_path"], kind="stable"
-        )
-        feats = list(pdf_to_features(ordered[TILED_COLS[3:]]))
-        for f in feats:
-            em.add_feature(f)
-
-        rows: list = []
-
-        # decide (lib.rs:305-338)
-        if cz == 0:
-            action = "leaf" if (z == imz or em.num_points <= imp) else "split"
-        elif z == max_zoom:
-            action = "stop"
-        elif z == cz:
-            action = "leaf"
-        else:
-            m = 1 << (cz - z)
-            action = "split" if (x == cx // m and y == cy // m) else "leaf"
-
-        if action == "split" and (force_subtree or em.num_points <= _bound):
-            # adaptive subtree fusion: this tile's whole recursion fits in
-            # one task — run the core tiler here; identical results, no
-            # further driver round-trips for this subtree
-            sub = CoreTiler.subtree(feats, o, z, x, y, cz, cx, cy)
-            for it in sub.tiles.values():
-                sem = it.emitter
-                sub_action = "leaf" if it.source_features else "stop"
-                _emitter_rows(rows, sem, sem.z, sem.x, sem.y, sub_action)
-                if it.source_features:
-                    _leaf_rows(rows, it.source_features, sem.z, sem.x, sem.y)
-            return pd.DataFrame(rows, columns=STEP_COLS)
-
-        _emitter_rows(rows, em, z, x, y, action)
-
-        if action == "leaf":
-            _leaf_rows(rows, feats, z, x, y)
-        elif action == "split":
-            z2 = float(1 << z)
-            p = 0.5 * o.tile.buffer / extent
-            for f in feats:
-                left = clip_feature(f, 0, (x - p) / z2, (x + 0.5 + p) / z2, lm)
-                right = clip_feature(
-                    f, 0, (x + 0.5 - p) / z2, (x + 1.0 + p) / z2, lm
-                )
-                for dx, half in ((0, left), (1, right)):
-                    for lf in half:
-                        top = clip_feature(
-                            lf, 1, (y - p) / z2, (y + 0.5 + p) / z2, lm
-                        )
-                        bot = clip_feature(
-                            lf, 1, (y + 0.5 - p) / z2, (y + 1.0 + p) / z2, lm
-                        )
-                        for dy, quarter in ((0, top), (1, bot)):
-                            for qf in quarter:
-                                r = dict(_TILE_NULLS)
-                                r.update(feature_to_row(qf))
-                                r.update(
-                                    row_kind=K_CHILD,
-                                    z=z + 1,
-                                    x=x * 2 + dx,
-                                    y=y * 2 + dy,
-                                )
-                                rows.append(r)
-        return pd.DataFrame(rows, columns=STEP_COLS)
-
-    return run
+# the render-row columns the index keeps per tile (plus RS_CAGG partials)
+_REND_COLS = [
+    "row_kind", "z", "x", "y", "world_copy", "feature_seq", "slice_path",
+    "sub_idx", "type", "kind", "geometry_json", "tags_json",
+    "id_str", "id_num", "id_float", "n_emitted", "num_points",
+]
 
 
 class SparkGeoJSONVT:
@@ -327,18 +112,14 @@ class SparkGeoJSONVT:
     ):
         self.spark = spark
         self.options = options or Options()
-        o = self.options
         self.tiles: Dict[int, SparkTile] = {}
         self.leaf_features: Dict[int, pd.DataFrame] = {}
         self.stats: Dict[int, int] = {}
         self.total = 0
         self._local = None
 
-        # raw JVM sum over the input — cheap (no Python kernels) and it
-        # lets the first level skip the expensive CONVERTED decision agg:
-        # raw <= fuse_bound -> the root fuses outright; raw > fuse_bound
-        # -> optimistic split (decisions finish from in-wave partials).
-        # Skipped when the caller forced prefer_local=True (unused there).
+        # raw JVM sum over the input (no Python kernels): picks local
+        # execution, and the level driver reuses it to route the root
         npts = None
         if prefer_local is None:
             npts = features_df.agg(F.sum("num_points")).collect()[0][0] or 0
@@ -346,52 +127,7 @@ class SparkGeoJSONVT:
         if prefer_local:
             self._init_local(features_df)
             return
-        if npts is None:
-            npts = features_df.agg(F.sum("num_points")).collect()[0][0] or 0
-
-        z2 = 1 << o.max_zoom
-        cw_args = (
-            (o.tile.tolerance / o.tile.extent) / z2,
-            o.generate_id,
-            o.tile.buffer / o.tile.extent,
-            o.tile.line_metrics,
-        )
-        if int(npts) <= fuse_bound(o, 0):
-            # raw-gated fuse: the WHOLE build is one bounded task —
-            # convert+wrap chained straight into the subtree kernel in a
-            # single mapInPandas over ONE coalesced input partition (one
-            # Python runner invocation; the former grouped path paid a
-            # decisions broadcast job, a cache build, and a shuffle, and
-            # a plain frontier.coalesce(1) re-initialized the Python
-            # runner once per upstream local partition: 4 s of overhead
-            # for a 0.15 s kernel on us-states)
-            from geojson_vt_rs_spark.operators.pipeline import (
-                _convert_wrap_kernel,
-            )
-
-            kernel = _level_kernel(o, 0, 0, 0, force_subtree=True)
-            fuse_wave = features_df.coalesce(1).mapInPandas(
-                _fuse_wave_kernel(
-                    _convert_wrap_kernel(*cw_args), kernel, (0, 0, 0)
-                ),
-                schema=STEP_SCHEMA,
-            )
-            self._collect_fused_root(fuse_wave, 0, 0, 0)
-            return
-        wrapped = convert_wrap_stage(features_df, *cw_args)
-        frontier = wrapped.select(
-            F.lit(0).alias("z"), F.lit(0).alias("x"), F.lit(0).alias("y"), "*"
-        )
-        # lazy fused convert+wrap+render+split plan for the optimistic
-        # first turn (one Arrow pass instead of two); `frontier` stays
-        # the recovery/mispredicted-leaf source
-        first_wave = convert_wrap_render_split_stage(
-            features_df, *cw_args, options=o
-        )
-        self._run(
-            frontier, 0, 0, 0, 0, 0, 0, raw_npts=int(npts),
-            first_wave=first_wave,
-        )
+        build_levels(spark, self.options, features_df, _IndexSink(self), npts)
 
     # ------------------------------------------------------------------
     def _init_local(self, features_df: DataFrame) -> None:
@@ -415,378 +151,30 @@ class SparkGeoJSONVT:
             )
 
     # ------------------------------------------------------------------
-    def _collect_fused_root(self, fuse_wave: DataFrame, rz, rx, ry) -> None:
-        """Collect the single fused-subtree wave (raw-gated small build):
-        one Spark job, then the same tile/leaf registration the grouped
-        fuse path used."""
-        meta = fuse_wave.filter(
-            F.col("row_kind").isin(K_TILE, K_STATS, K_LEAF)
-        ).toPandas()
-        tile_pdf = meta[meta.row_kind.isin([K_TILE, K_STATS])]
-        for (z, x, y), grp in tile_pdf.groupby(["z", "x", "y"], sort=False):
-            stats_row = grp[grp.row_kind == K_STATS].iloc[0]
-            self._register(
-                int(z), int(x), int(y), None,
-                int(stats_row["tile_num_points"]),
-                int(stats_row["tile_num_simplified"]),
-                lazy=(grp, _fused_group_to_features),
-            )
-        leaf_pdf = meta[meta.row_kind == K_LEAF]
-        for (z, x, y), grp in leaf_pdf.groupby(["z", "x", "y"], sort=False):
-            self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
-                TILED_COLS
-            ].reset_index(drop=True)
-        if to_id(rz, rx, ry) not in self.tiles:
-            # fused an empty/fully-dropped input: the root tile still
-            # exists (lib.rs:265-295)
-            self._register(rz, rx, ry, [], 0, 0)
-
-    def _register(self, z: int, x: int, y: int, features, np_: int, ns: int,
-                  lazy=None):
+    def _register(self, z: int, x: int, y: int, np_: int, ns: int,
+                  rows: Optional[pd.DataFrame] = None, parser=None):
+        """Memoize a new tile (a known key is left as it is); its features
+        are parsed from ``rows`` on first access, or empty without."""
         tid = to_id(z, x, y)
         if tid in self.tiles:
             return
-        self.tiles[tid] = SparkTile(z, x, y, features, np_, ns, lazy=lazy)
+        if rows is None:
+            self.tiles[tid] = SparkTile(z, x, y, [], np_, ns)
+        else:
+            self.tiles[tid] = SparkTile(
+                z, x, y, None, np_, ns, lazy=(rows, parser)
+            )
         self.stats[z] = self.stats.get(z, 0) + 1
         self.total += 1
 
-    def _decide(self, z, x, y, num_points, cz, cx, cy) -> str:
-        """'leaf' (stop+retain) | 'stop' (no retain) | 'split'
-        (lib.rs:305-338)."""
-        o = self.options
-        if cz == 0:
-            if z == o.index_max_zoom or num_points <= o.index_max_points:
-                return "leaf"
-            return "split"
-        if z == o.max_zoom:
-            return "stop"
-        if z == cz:
-            return "leaf"
-        m = 1 << (cz - z)
-        if x != cx // m or y != cy // m:
-            return "leaf"
-        return "split"
-
-    def _run(self, frontier: DataFrame, rz, rx, ry, cz, cx, cy,
-             raw_npts=None, first_wave=None):
-        """One pyramid level per loop turn, decision-first:
-
-        1. per-tile num_points via a JVM partial+final agg (the ONLY
-           per-tile state the stop predicate needs, lib.rs:305-313);
-        2. driver decides leaf/stop/split per tile (index-sized), small
-           split tiles become 'fuse' (whole subtree in one task);
-        3. rendering and child-splitting run per-ROW (mapInPandas) —
-           a z0 root with millions of features stays fully parallel;
-           only bounded 'fuse' groups use applyInPandas.
-
-        With ``raw_npts`` (the RAW input point sum, build path only) the
-        FIRST level skips the converted decision agg — the one job that
-        materialized the whole convert+wrap output before any rendering:
-        raw <= fuse_bound routes the root straight into one fused
-        subtree task (converted tnp <= 3*raw: wrap at most triples
-        dateline-straddling features, so the task stays within ~3x the
-        soft fuse budget worst-case); larger inputs render+split the
-        root OPTIMISTICALLY and finish the leaf/split decision from
-        parent partials emitted inside the same wave, recovering the
-        leaf retention from the persisted frontier in the (rare) case
-        the root was not really a split."""
-        from geojson_vt_rs_spark.operators.pipeline import (
-            RS_CAGG,
-            RS_CHILD,
-            RS_RENDER,
-            render_split_stage,
-        )
-
-        o = self.options
-        spark = self.spark
-        # driver-routed fuse groups must always recurse locally
-        kernel = _level_kernel(o, cz, cx, cy, force_subtree=True)
-        fuse_max = fuse_bound(o, cz)
-        import os
-        import time as _time
-
-        debug = os.environ.get("SPARK_GRAFT_DEBUG_LEVELS") == "1"
-        first = True
-        # the raw gate's fuse case is handled in __init__ (one fused
-        # task); a raw-gated entry here is always the optimistic split
-        first_mode = None
-        if cz == 0 and raw_npts is not None:
-            first_mode = "optimistic"
-        pending_children: list = []  # expected child keys of split parents
-        prev = None
-        # next level's per-tile num_points, pre-assembled from the render
-        # pass's RS_CAGG map-side partials — only the FIRST level pays a
-        # separate Spark agg job; afterwards each level is ONE job wave
-        next_np: Optional[pd.DataFrame] = None
-        while True:
-            _t0 = _time.time()
-            turn_mode = first_mode if first else None
-            # The frontier is cached ONLY when the decision agg makes a
-            # second consumer (first turns without a gate, drill entry);
-            # gated first turns and steady-state levels have exactly one
-            # reader (the wave / fr's cache build over prev's checkpoint)
-            # — see plans/checkpoint.py for the 4M OOM this avoids
-            if turn_mode is not None:
-                np_pdf = None
-                decisions = [(rz, rx, ry, "split", None)]
-                first = False
-            elif next_np is not None:
-                np_pdf = next_np
-                next_np = None
-            else:
-                frontier = frontier.persist()
-                np_pdf = (
-                    frontier.groupBy("z", "x", "y")
-                    .agg(F.sum("num_points").alias("tnp"))
-                    .toPandas()
+    def _retain(self, leaf_rows: pd.DataFrame, skip=frozenset()) -> None:
+        """Leaf tiles keep their source features (lib.rs:311,324,335)."""
+        for (z, x, y), grp in leaf_rows.groupby(["z", "x", "y"], sort=False):
+            key = (int(z), int(x), int(y))
+            if key not in skip:
+                self.leaf_features[to_id(*key)] = grp[TILED_COLS].reset_index(
+                    drop=True
                 )
-                if prev is not None:
-                    # the agg materialized the persisted frontier, so the
-                    # previous level's checkpoint can go
-                    prev.unpersist()
-                    prev = None
-            _t_agg = _time.time()
-            if np_pdf is not None:
-                if np_pdf.empty:
-                    if prev is not None:
-                        prev.unpersist()
-                        prev = None
-                    if first:
-                        # split_tile(empty, root) still creates the root
-                        # tile (lib.rs:265-295: insert precedes the early
-                        # return)
-                        self._register(rz, rx, ry, [], 0, 0)
-                    for ck in pending_children:
-                        self._register(ck[0], ck[1], ck[2], [], 0, 0)
-                    frontier.unpersist()
-                    return
-                first = False
-
-                observed = set()
-                decisions = []
-                for r in np_pdf.itertuples(index=False):
-                    z, x, y, tnp = int(r.z), int(r.x), int(r.y), int(r.tnp)
-                    observed.add((z, x, y))
-                    action = self._decide(z, x, y, tnp, cz, cx, cy)
-                    if action == "split" and tnp <= fuse_max:
-                        action = "fuse"
-                    decisions.append((z, x, y, action, tnp))
-                # children of the PREVIOUS level's split parents that got
-                # no features -> empty memoized tiles (lib.rs:344-428)
-                for ck in pending_children:
-                    if ck not in observed:
-                        self._register(ck[0], ck[1], ck[2], [], 0, 0)
-
-            ddf = decisions_df(
-                spark, [(z, x, y, a) for z, x, y, a, _ in decisions]
-            )
-            fr = frontier.join(F.broadcast(ddf), ["z", "x", "y"])
-            has_fuse = any(a == "fuse" for _, _, _, a, _ in decisions)
-            has_leaf = any(a == "leaf" for _, _, _, a, _ in decisions)
-            has_nonfuse = any(a != "fuse" for _, _, _, a, _ in decisions)
-            if (
-                turn_mode != "optimistic"
-                and int(has_fuse) + int(has_leaf) + int(has_nonfuse) >= 2
-            ):
-                # cache only when >= 2 of the level's collections read fr
-                # (optimistic turns and single-action levels have exactly
-                # one consumer — caching there is a wasted extra job)
-                fr = fr.persist()
-
-            # ONE fused per-row pass renders every non-fused live tile AND
-            # clips split-tile children (the VtFeature is built once; one
-            # Spark job instead of a render job + a split job per level)
-            nonfuse = fr.filter(F.col("action") != "fuse")
-            # localCheckpoint truncates the per-level lineage: without it
-            # each level's logical plan embeds every previous level's and
-            # analysis cost compounds (measured 4x wall blowup by z5 on a
-            # no-fuse us-states build)
-            if turn_mode == "optimistic" and first_wave is not None:
-                # fused convert+wrap+render+split plan over the RAW input
-                # (one Arrow pass; fr is bypassed on this turn)
-                step2 = first_wave.localCheckpoint(eager=False)
-            else:
-                step2 = (
-                    render_split_stage(
-                        nonfuse, o,
-                        emit_parent_cagg=(turn_mode == "optimistic"),
-                    ).localCheckpoint(eager=False)
-                    if has_nonfuse
-                    else None
-                )
-
-            # the level's three collections are INDEPENDENT Spark actions
-            # (render rows from step2; fused subtrees and leaf retention
-            # from fr) -> run them as concurrent jobs so the level pays
-            # one job latency, not three (fr is a narrow broadcast join
-            # over the already-materialized persisted frontier, so a
-            # concurrent first touch duplicates only map-side work).
-            # RS_CAGG partials ride along in the SAME collection: the next
-            # level's decision agg finishes driver-side (no extra job).
-            _REND_COLS = [
-                "row_kind",
-                "z", "x", "y", "world_copy", "feature_seq", "slice_path",
-                "sub_idx", "type", "kind", "geometry_json", "tags_json",
-                "id_str", "id_num", "id_float", "n_emitted", "num_points",
-            ]
-
-            def _collect_rend():
-                if step2 is None:
-                    return pd.DataFrame(columns=_REND_COLS)
-                return step2.filter(
-                    F.col("row_kind").isin(RS_RENDER, RS_CAGG)
-                ).select(*_REND_COLS).toPandas()
-
-            def _collect_fuse():
-                step = (
-                    fr.filter(F.col("action") == "fuse")
-                    .drop("action")
-                    .groupBy("z", "x", "y")
-                    .applyInPandas(kernel, schema=STEP_SCHEMA)
-                )
-                return step.filter(
-                    F.col("row_kind").isin(K_TILE, K_STATS, K_LEAF)
-                ).toPandas()
-
-            def _collect_leaf():
-                return (
-                    fr.filter(F.col("action") == "leaf")
-                    .drop("action")
-                    .select(*TILED_COLS)
-                    .toPandas()
-                )
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(3) as _ex:
-                rend_f = _ex.submit(_collect_rend)
-                fuse_f = _ex.submit(_collect_fuse) if has_fuse else None
-                leaf_f = _ex.submit(_collect_leaf) if has_leaf else None
-                merged = rend_f.result()
-                meta = fuse_f.result() if fuse_f is not None else None
-                leaf_rows = leaf_f.result() if leaf_f is not None else None
-            _t_rend = _time.time()
-            if prev is not None:
-                # the collections materialized this level's outputs; the
-                # previous checkpoint is no longer referenced
-                prev.unpersist()
-                prev = None
-            if turn_mode == "optimistic":
-                # finish the deferred root decision from the wave's own
-                # parent partials (sub_idx == -1 RS_CAGG rows)
-                pm = (
-                    (merged["row_kind"] == RS_CAGG)
-                    & (merged["sub_idx"] == -1)
-                ).to_numpy()
-                saw_root = bool(pm.any())
-                tnp_root = int(merged.loc[pm, "num_points"].sum())
-                merged = merged.loc[~pm]
-                if not saw_root:
-                    # empty (or fully-dropped) input: the root tile still
-                    # exists (lib.rs:265-295)
-                    self._register(rz, rx, ry, [], 0, 0)
-                    frontier.unpersist()
-                    fr.unpersist()
-                    if step2 is not None:
-                        step2.unpersist()
-                    return
-                action = self._decide(rz, rx, ry, tnp_root, cz, cx, cy)
-                decisions = [(rz, rx, ry, action, tnp_root)]
-                if action != "split":
-                    # mispredicted: the root is really a leaf — keep its
-                    # render rows, retain the source features from the
-                    # persisted frontier, drop the wasted child clips
-                    leaf_rows = frontier.select(*TILED_COLS).toPandas()
-            frontier.unpersist()
-            is_cagg = merged["row_kind"].to_numpy() == RS_CAGG
-            if is_cagg.any():
-                next_np = (
-                    merged.loc[is_cagg]
-                    .groupby(["z", "x", "y"], as_index=False)["num_points"]
-                    .sum()
-                    .rename(columns={"num_points": "tnp"})
-                )
-                rend = merged.loc[~is_cagg]
-            else:
-                next_np = None
-                rend = merged
-            rend_groups = (
-                dict(list(rend.groupby(["z", "x", "y"], sort=False)))
-                if not rend.empty
-                else {}
-            )
-
-            split_parents = []
-            for z, x, y, action, tnp in decisions:
-                if action == "fuse":
-                    continue
-                grp = rend_groups.get((z, x, y))
-                if grp is None:
-                    self._register(z, x, y, [], tnp, 0)
-                else:
-                    ns = int(grp["n_emitted"].sum())
-                    # feature materialization (sort + JSON parse) is
-                    # deferred to first .features access
-                    self._register(
-                        z, x, y, None, tnp, ns,
-                        lazy=(grp, _render_group_to_features),
-                    )
-                if action == "split":
-                    split_parents.append((z, x, y))
-                    self.leaf_features.pop(to_id(z, x, y), None)  # lib.rs:430-433
-
-            # bounded fused subtrees (grouped; group size <= fuse_max pts)
-            if meta is not None:
-                tile_pdf = meta[meta.row_kind.isin([K_TILE, K_STATS])]
-                for (z, x, y), grp in tile_pdf.groupby(["z", "x", "y"], sort=False):
-                    stats_row = grp[grp.row_kind == K_STATS].iloc[0]
-                    self._register(
-                        int(z), int(x), int(y), None,
-                        int(stats_row["tile_num_points"]),
-                        int(stats_row["tile_num_simplified"]),
-                        lazy=(grp, _fused_group_to_features),
-                    )
-                leaf_pdf = meta[meta.row_kind == K_LEAF]
-                for (z, x, y), grp in leaf_pdf.groupby(["z", "x", "y"], sort=False):
-                    self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
-                        TILED_COLS
-                    ].reset_index(drop=True)
-
-            # leaf tiles retain their source features (lib.rs:311,324,335)
-            if leaf_rows is not None:
-                for (z, x, y), grp in leaf_rows.groupby(["z", "x", "y"], sort=False):
-                    self.leaf_features[to_id(int(z), int(x), int(y))] = grp[
-                        TILED_COLS
-                    ].reset_index(drop=True)
-
-            if debug:
-                zmin = min(d[0] for d in decisions)
-                print(
-                    f"[pyramid] z{zmin}: tiles={len(decisions)} "
-                    f"mode={turn_mode or 'agg'} "
-                    f"agg={_t_agg - _t0:.1f}s render={_t_rend - _t_agg:.1f}s "
-                    f"rest={_time.time() - _t_rend:.1f}s",
-                    flush=True,
-                )
-            fr.unpersist()
-            if not split_parents:
-                if step2 is not None:
-                    step2.unpersist()
-                return
-            if next_np is None:
-                # split parents whose children all clipped empty: next
-                # turn sees an empty decision table without another job
-                next_np = pd.DataFrame(columns=["z", "x", "y", "tnp"])
-            pending_children = [
-                (z + 1, 2 * x + dx, 2 * y + dy)
-                for z, x, y in split_parents
-                for dx in (0, 1)
-                for dy in (0, 1)
-            ]
-            frontier = step2.filter(F.col("row_kind") == RS_CHILD).select(
-                *TILED_COLS
-            )
-            prev = step2
 
     # ------------------------------------------------------------------
     def find_parent(self, z, x, y):
@@ -807,7 +195,7 @@ class SparkGeoJSONVT:
         x = ((x_ % z2) + z2) % z2
         tid = to_id(z, x, y)
         if self._local is not None:
-            em = self._local.get_tile(z, x, y)
+            self._local.get_tile(z, x, y)
             self._sync_local()
             if tid in self.tiles:
                 return self.tiles[tid]
@@ -817,42 +205,103 @@ class SparkGeoJSONVT:
         parent = self.find_parent(z, x, y)
         if parent is None:
             raise LookupError("Parent tile not found")
-        pz, px, py = parent
-        leaf = self.leaf_features.get(to_id(pz, px, py))
-        if leaf is None or leaf.empty:
-            # reference: split_tile(parent, empty) creates nothing new;
-            # no Spark job needed
-            if self.find_parent(z, x, y) is None:
-                raise LookupError("Parent tile not found")
-            return EMPTY_TILE
-        frontier = create_feature_df(
-            self.spark, leaf[TILED_COLS], TILED_FEATURE_SCHEMA
-        )
-        self._run(frontier, pz, px, py, z, x, y)
-        if tid in self.tiles:
-            return self.tiles[tid]
-        if self.find_parent(z, x, y) is None:
-            raise LookupError("Parent tile not found")
-        return EMPTY_TILE
+        leaf = self.leaf_features.get(to_id(*parent))
+        if leaf is not None and not leaf.empty:
+            self._drill(leaf, parent, (z, x, y))
+        # a feature-less ancestor creates nothing new (split_tile(parent,
+        # empty)), so the tile may still be missing
+        return self.tiles.get(tid, EMPTY_TILE)
+
+    def _drill(self, leaf: pd.DataFrame, root: tuple, target: tuple) -> None:
+        """One feature-parallel pass from ``root``'s retained features to
+        ``target`` (drill_descend_stage), collected in one job: render
+        rows, retained leaves and per-tile partials.  Tiles already in
+        the memo (the re-split ancestor) keep their entries."""
+        existing = {(t.z, t.x, t.y) for t in self.tiles.values()}
+        frontier = create_feature_df(self.spark, leaf[TILED_COLS], TILED_FEATURE_SCHEMA)
+        rows = drill_descend_stage(frontier, self.options, root, target).toPandas()
+        kind = rows["row_kind"]
+        groups = dict(list(
+            rows[kind == RS_RENDER].groupby(["z", "x", "y"], sort=False)
+        ))
+        for z, x, y, tnp, ns in drill_stats(
+            rows[kind == RS_CAGG], root, target, existing, self.options.max_zoom
+        ):
+            self._register(z, x, y, tnp, ns, groups.get((z, x, y)),
+                           _render_group_to_features)
+        self._retain(rows[kind == RS_LEAF], skip=existing)
+        self.leaf_features.pop(to_id(*root), None)  # sliced (lib.rs:430-433)
 
     def get_internal_tiles(self):
         return self.tiles
 
 
-def _fuse_wave_kernel(cw_kernel, group_kernel, key):
-    """Raw feature batches -> convert+wrap -> the (key, pdf) subtree
-    group kernel, all inside ONE mapInPandas invocation (the raw-gated
-    fuse build).  The group kernel sorts its rows itself, so batch order
-    is irrelevant; the group key's (z, x, y) never appear as columns."""
+class _IndexSink:
+    """Level-driver sink of SparkGeoJSONVT: each level's render rows,
+    fused subtrees and leaf features are collected to the driver by
+    concurrent jobs (one wave per level) and memoized in the index."""
 
-    def run(batches):
-        pdfs = [p for p in cw_kernel(batches) if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        yield group_kernel(key, pdf)
+    def __init__(self, index: SparkGeoJSONVT):
+        self.index = index
+        self.groups: dict = {}  # (z, x, y) -> the level's render rows
 
-    return run
+    def resume(self):
+        return 0, None, []
+
+    def begin(self, level: int) -> None:
+        self.groups = {}
+
+    def wave(self, render, fused, leaves, split: bool):
+        # independent Spark actions: the level pays one job latency, not
+        # three; the RS_CAGG partials ride along with the render rows
+        if render is not None:
+            render = render.filter(
+                F.col("row_kind").isin(RS_RENDER, RS_CAGG)
+            ).select(*_REND_COLS)
+        if fused is not None:
+            fused = fused.filter(F.col("row_kind").isin(K_TILE, K_STATS, K_LEAF))
+        with ThreadPoolExecutor(3) as ex:
+            jobs = [
+                None if df is None else ex.submit(df.toPandas)
+                for df in (render, fused, leaves)
+            ]
+            got = [None if job is None else job.result() for job in jobs]
+        merged, meta, leaf_rows = got
+        ns, cagg, n_fused = {}, None, 0
+        if merged is not None:
+            is_cagg = (merged["row_kind"] == RS_CAGG).to_numpy()
+            cagg = merged.loc[is_cagg]
+            self.groups = dict(list(
+                merged.loc[~is_cagg].groupby(["z", "x", "y"], sort=False)
+            ))
+            ns = {k: int(g["n_emitted"].sum()) for k, g in self.groups.items()}
+        if meta is not None:
+            tiles = meta[meta.row_kind.isin([K_TILE, K_STATS])]
+            for (z, x, y), grp in tiles.groupby(["z", "x", "y"], sort=False):
+                st = grp[grp.row_kind == K_STATS].iloc[0]
+                self.index._register(
+                    int(z), int(x), int(y), int(st["tile_num_points"]),
+                    int(st["tile_num_simplified"]), grp, _fused_group_to_features,
+                )
+                n_fused += 1
+            self.index._retain(meta[meta.row_kind == K_LEAF])
+        if leaf_rows is not None:
+            self.index._retain(leaf_rows)
+        return ns, cagg, n_fused
+
+    def leaves(self, df: DataFrame) -> None:
+        self.index._retain(df.toPandas())
+
+    def drop_children(self) -> None:
+        pass  # the index never holds a level's children
+
+    def tiles(self, stats) -> None:
+        for z, x, y, tnp, ns, _action in stats:
+            self.index._register(z, x, y, tnp, ns, self.groups.get((z, x, y)),
+                                 _render_group_to_features)
+
+    def commit(self, pending_children, n_children: int) -> None:
+        pass  # registered as it arrives
 
 
 def _render_group_to_features(grp: pd.DataFrame) -> list:
@@ -862,46 +311,29 @@ def _render_group_to_features(grp: pd.DataFrame) -> list:
         ["world_copy", "feature_seq", "slice_path", "sub_idx"],
         kind="stable",
     )
-    return _render_rows_to_features(sub)
+    return _parse_features(sub, "id_")
 
 
 def _fused_group_to_features(grp: pd.DataFrame) -> list:
-    return _rows_to_tile_features(grp[grp.row_kind == K_TILE])
+    sub = grp[grp.row_kind == K_TILE].sort_values("feature_idx")
+    return _parse_features(sub, "tile_id_")
 
 
-def _render_rows_to_features(sub: pd.DataFrame) -> list:
-    """RENDER_SCHEMA rows (already sorted) -> canonical tile features."""
+def _parse_features(sub: pd.DataFrame, ids: str) -> list:
+    """Tile-feature rows (already sorted) -> canonical tile features; the
+    feature id columns are ``<ids>str``, ``<ids>num`` and ``<ids>float``."""
     feats = []
-    for r in sub.itertuples(index=False):
+    for r in sub.to_dict("records"):
+        id_str, id_num, id_float = (r[ids + k] for k in ("str", "num", "float"))
         feats.append(
             dict(
-                type=int(r.type),
-                kind=int(r.kind),
-                geometry=json.loads(r.geometry_json),
-                tags=None if r.tags_json is None else json.loads(r.tags_json),
-                id_str=r.id_str if isinstance(r.id_str, str) else None,
-                id_num=int(r.id_num) if pd.notna(r.id_num) else None,
-                id_float=float(r.id_float) if pd.notna(r.id_float) else None,
-            )
-        )
-    return feats
-
-
-def _rows_to_tile_features(grp: pd.DataFrame) -> list:
-    feats = []
-    sub = grp.sort_values("feature_idx")
-    for r in sub.itertuples(index=False):
-        feats.append(
-            dict(
-                type=int(r.type),
-                kind=int(r.kind),
-                geometry=json.loads(r.geometry_json),
-                tags=None if r.tags_json is None else json.loads(r.tags_json),
-                id_str=r.tile_id_str if isinstance(r.tile_id_str, str) else None,
-                id_num=int(r.tile_id_num) if pd.notna(r.tile_id_num) else None,
-                id_float=(
-                    float(r.tile_id_float) if pd.notna(r.tile_id_float) else None
-                ),
+                type=int(r["type"]),
+                kind=int(r["kind"]),
+                geometry=json.loads(r["geometry_json"]),
+                tags=None if r["tags_json"] is None else json.loads(r["tags_json"]),
+                id_str=id_str if isinstance(id_str, str) else None,
+                id_num=int(id_num) if pd.notna(id_num) else None,
+                id_float=float(id_float) if pd.notna(id_float) else None,
             )
         )
     return feats

@@ -1,7 +1,12 @@
 import json
 import os
+import sys
 
 import pytest
+
+# the checkout under test, wherever it is: its package and
+# __spark_entry__ import ahead of any installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FIXTURES = "/root/reference/fixtures"
 DATA = "/root/reference/data"

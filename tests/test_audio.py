@@ -3,9 +3,6 @@ rejection BEFORE allocation, generator determinism, and the driver
 query vs its inline-VALUES oracle."""
 
 import struct
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 import numpy as np

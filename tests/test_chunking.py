@@ -4,9 +4,6 @@ landing exactly on chunk boundaries, one doc spanning many chunks,
 sparse doc_ids, bucket-width and partitioning invariance."""
 
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 

@@ -4,10 +4,6 @@ the edge paths — duplicate seeds leaving a cluster permanently empty
 (COALESCE lane), null embedding rows, argmin ties, and partitioning
 invariance (integer sums must not care how rows are placed)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 
 from geojson_vt_rs_spark.operators.clustering import (

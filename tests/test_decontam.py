@@ -3,9 +3,6 @@ exactness vs a naive Python twin (incl. null/short/messy-whitespace
 docs), anti-join completeness, and broadcast-vs-shuffle equivalence."""
 
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -8,13 +8,9 @@ corpus (the round-4 advisory pattern: the batch tokenizer diverged only
 on documents the parity corpus didn't contain).
 """
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 DOCS_ROWS = [

@@ -2,10 +2,6 @@
 null/empty/short text, vertical-tab whitespace) and the sf0.001
 documents table."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 
 from geojson_vt_rs_spark.operators.ngram_stats import (

@@ -6,9 +6,6 @@ import duckdb
 import pandas as pd
 import pytest
 
-import sys
-
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"

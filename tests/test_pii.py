@@ -1,10 +1,6 @@
 """PII redaction invariants (operators/pii.py): Spark and DuckDB produce
 byte-identical redacted text and counts on overlap/edge corpora."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 
 from geojson_vt_rs_spark.operators.pii import (

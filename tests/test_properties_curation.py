@@ -5,10 +5,6 @@ crafted + real tables (test_search.py / test_clustering.py) — together
 the triangle covers all three implementations without paying a Spark
 job per hypothesis example."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 from hypothesis import given, settings
 from hypothesis import strategies as st

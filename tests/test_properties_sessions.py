@@ -7,9 +7,6 @@ implementations without paying a Spark job per example."""
 
 import datetime
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 from hypothesis import given, settings

@@ -2,10 +2,7 @@
 match a naive Python twin and the DuckDB exprs on edge corpora."""
 
 import re
-import sys
 from collections import Counter
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 

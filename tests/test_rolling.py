@@ -3,9 +3,6 @@ window-1 old included, window old excluded), same-us tie peers share a
 frame, partitioning invariance."""
 
 import datetime
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 

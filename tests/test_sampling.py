@@ -2,10 +2,6 @@
 and determinism, stratified-sample containment, and quota_cap exactness
 (salted two-phase rank == plain single-window top-k)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 

@@ -4,10 +4,6 @@ edge paths — ASCII-only whitespace class (vertical tab), null text rows,
 score ties at the top-k cut, and partitioning invariance (the per-doc
 score is an integer sum, so row placement cannot move a result)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 
 from geojson_vt_rs_spark.operators.search import (

@@ -5,9 +5,6 @@ inclusivity, intervals spanning / inside one bucket), plus
 partitioning invariance."""
 
 import datetime
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 

@@ -5,9 +5,6 @@ the gap-exactly-at-threshold boundary (continues) and tie timestamps."""
 
 import datetime as dt
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from geojson_vt_rs_spark.operators.sessions import sessionize
 from geojson_vt_rs_spark.streaming.ingest import EVENT_SCHEMA

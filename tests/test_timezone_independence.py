@@ -13,11 +13,7 @@ and is asserted here as the counter-example so a refactor to it fails
 loudly.
 """
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 

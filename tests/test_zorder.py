@@ -2,10 +2,6 @@
 twin vs bit-by-bit Python) + the locality property that justifies the
 layout op, + the zorder_blocks oracle at sf0.001."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 import pytest
 

@@ -7,9 +7,6 @@ the parquet footers (pyarrow), not from timing."""
 
 import glob
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
